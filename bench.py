@@ -409,7 +409,11 @@ def _clear_session_caches(spark) -> None:
     block-manager cache plus the module-level cached-DataFrame memos
     (shingle signatures, dup-graph edges, PQ codebook elements). The
     on-disk staged-feed parquet is deliberately KEPT — it persists
-    across processes too, so a fresh judge session would also see it."""
+    across processes too, so a fresh judge session would also see it.
+    Spark's generated-code cache is KEPT too: like the staged feed it
+    persists across queries, for the life of the JVM, and session.py
+    sizes it to hold every registered query's compiled classes, so a
+    "cold" run here re-plans and re-executes but reuses compiled code."""
     spark.catalog.clearCache()
     from streams_spark.functions import text_funcs
     from streams_spark.operators import dedup, similarity

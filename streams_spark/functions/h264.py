@@ -1085,12 +1085,6 @@ def scale_luma_dc(f: np.ndarray, qp: int) -> np.ndarray:
     return (f * v + add) >> -shift
 
 
-def scale_chroma_dc(f: np.ndarray, qp: int) -> np.ndarray:
-    """Rescale 2x2 chroma DC (8.5.11): dcC = (f * v(qP%6,0)
-    * 2^(qP/6)) >> 5."""
-    return (f * _V[qp % 6][0] << (qp // 6)) >> 5
-
-
 def residual_4x4(
     levels: list[int] | None, qp: int, dc: int | None = None
 ) -> np.ndarray:

@@ -239,21 +239,6 @@ def parse_avcc(payload: bytes) -> AvcConfig:
     return AvcConfig(profile, level, nal_length_size, sps, pps)
 
 
-def annexb_to_avc_sample(au: bytes, nal_length_size: int = 4) -> bytes:
-    """One Annex-B access unit -> one avc1 sample (length-prefixed
-    NALs). Raises if a NAL exceeds the prefix's range."""
-    out = bytearray()
-    limit = 1 << (8 * nal_length_size)
-    for nal in _annexb_nals(au):
-        if len(nal) >= limit:
-            raise Mp4Error(
-                f"NAL of {len(nal)} bytes exceeds "
-                f"{nal_length_size}-byte length prefix"
-            )
-        out += len(nal).to_bytes(nal_length_size, "big") + nal
-    return bytes(out)
-
-
 def avc_sample_to_annexb(sample: bytes, nal_length_size: int) -> bytes:
     """One avc1 sample -> Annex-B bytes for the elementary-stream
     decoder. The length prefixes must tile the sample exactly: an

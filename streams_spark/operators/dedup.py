@@ -371,6 +371,7 @@ def d_ngram_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     a, b = pref.alias("a"), pref.alias("b")
     max_ratio = 1.0 / JACCARD_T
     cand = (
+        # AQE may build either side, each with its own code: 0-2 recompiles
         a.join(
             b,
             (F.col("a.h") == F.col("b.h"))
@@ -1285,6 +1286,7 @@ def d_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     a = ex.alias("a")
     b = ex.alias("b")
     pairs = (
+        # AQE may build either side, each with its own code: 2-6 recompiles
         a.join(
             b,
             (F.col("a.h") == F.col("b.h"))
@@ -1565,6 +1567,7 @@ def _closure_semi_naive(edges: DataFrame) -> DataFrame:
     depth = 1
     while not frontier.isEmpty():
         depth += 1
+        # AQE re-plans each level at run time; a changed plan recompiles
         frontier = (
             frontier.alias("f")
             .join(edges.alias("e"), F.col("e.src") == F.col("f.dst"))

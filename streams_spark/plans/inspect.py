@@ -1,9 +1,10 @@
 """Physical-plan introspection helpers.
 
 Used by tools/audit_plans.py (PLANS.md generation) and by tests that
-assert plan shapes (no-shuffle bucketed joins, partition pruning). Kept
-engine-agnostic: everything works off `df.explain("formatted")` text, so
-it needs no private Spark APIs.
+assert plan shapes (no-shuffle bucketed joins, partition pruning). The
+plan helpers are engine-agnostic: they work off `df.explain("formatted")`
+text, so they need no private Spark APIs. `codegen_stats` is the one
+exception: it reads the driver JVM's codegen counters.
 """
 
 from __future__ import annotations
@@ -13,7 +14,7 @@ import io
 import re
 from collections import Counter
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 PYTHON_STAGES = (
     "FlatMapCoGroupsInPandas",
@@ -67,10 +68,6 @@ def partition_filters(df: DataFrame) -> list[str]:
     return [l.strip() for l in plan.splitlines() if "PartitionFilters" in l]
 
 
-def shuffle_count(df: DataFrame) -> int:
-    return operator_counts(df).get("Exchange", 0)
-
-
 def python_stage_count(df: DataFrame) -> int:
     c = operator_counts(df)
     return sum(c.get(k, 0) for k in PYTHON_STAGES)
@@ -101,3 +98,19 @@ def aqe_final_summary(df: DataFrame) -> dict[str, int]:
         "smj": len(re.findall(r"SortMergeJoin", final)),
         "shj": len(re.findall(r"ShuffledHashJoin", final)),
     }
+
+
+def codegen_stats(spark: SparkSession) -> tuple[int, float]:
+    """(classes compiled, compile ms) by this JVM since it started.
+
+    The count is Spark's `CodegenMetrics` compilation-time histogram,
+    which gains one sample per Janino compile, that is per miss of the
+    generated-class cache. The time is `CodeGenerator.compileTime`, the
+    exact nanosecond sum behind that histogram (its snapshot is a
+    sample). Both are JVM-wide and only grow: diff two readings to
+    charge a span of work. Executors in other JVMs are not counted, so
+    on a cluster this sees driver-side compiles only."""
+    jvm = spark.sparkContext._jvm
+    count = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
+    nanos = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime()
+    return int(count), nanos / 1e6
