@@ -5,6 +5,7 @@ sf0.1) on local[$SPARK_GRAFT_CPUS]. Prints ONE JSON line:
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import sys
@@ -305,10 +306,11 @@ def _measure_scan_floors(spark, sf_dir: str) -> dict[str, float]:
 BENCH_NOTES = {
     "canary_basket": (
         "r12: non-canary rows reuse one parquet-source resolution per "
-        "session (tables._READ_MEMO — plan-side only, every action "
-        "still scans the files); the five canary rows run with that "
-        "memo cleared so canary_factor keeps measuring host drift "
-        "against the identical r1 work, not the r12 code change. "
+        "session (the sources/cache.py memo — plan-side only, every "
+        "action still scans the files); the five canary rows run "
+        "inside cache.bypass(), so every load resolves its source as "
+        "in r1 and canary_factor keeps measuring host drift against "
+        "the identical r1 work, not the r12 code change. "
         "Canary raw readings are therefore comparable to all prior "
         "rounds; non-canary readings include the memo win."
     ),
@@ -406,24 +408,19 @@ ROTATED_OUT_R5 = {
 
 def _clear_session_caches(spark) -> None:
     """Reset every layer that lets one query warm the next: Spark's
-    block-manager cache plus the module-level cached-DataFrame memos
-    (shingle signatures, dup-graph edges, PQ codebook elements). The
-    on-disk staged-feed parquet is deliberately KEPT — it persists
-    across processes too, so a fresh judge session would also see it.
-    Spark's generated-code cache is KEPT too: like the staged feed it
-    persists across queries, for the life of the JVM, and session.py
-    sizes it to hold every registered query's compiled classes, so a
-    "cold" run here re-plans and re-executes but reuses compiled code."""
-    spark.catalog.clearCache()
-    from streams_spark.functions import text_funcs
-    from streams_spark.operators import dedup, similarity
-    from streams_spark.sources import tables
+    block-manager cache plus the one in-process DataFrame memo
+    (sources/cache.py: parquet source resolution, shingle signatures,
+    dup-graph edges, PQ elements, identity documents). The on-disk
+    staged-feed parquet is deliberately KEPT — it persists across
+    processes too, so a fresh judge session would also see it. Spark's
+    generated-code cache is KEPT too: like the staged feed it persists
+    across queries, for the life of the JVM, and session.py sizes it to
+    hold every registered query's compiled classes, so a "cold" run here
+    re-plans and re-executes but reuses compiled code."""
+    from streams_spark.sources import cache
 
-    dedup._SHINGLE_CACHE.clear()
-    dedup._EDGE_CACHE.clear()
-    similarity._PQ_ELEMENT_CACHE.clear()
-    text_funcs._IDENTITY_CACHE.clear()
-    tables._READ_MEMO.clear()
+    spark.catalog.clearCache()
+    cache.clear()
 
 
 def main() -> None:
@@ -445,7 +442,7 @@ def main() -> None:
     if extra:
         names = [n for n in extra.split(",") if n in registry]
 
-    from streams_spark.sources import tables as _tables
+    from streams_spark.sources import cache
 
     def run_query(name: str) -> float:
         # The noop sink executes the FULL plan with zero driver-side
@@ -454,18 +451,18 @@ def main() -> None:
         # under a count, so map-only queries measured scan cost only
         # (t_text_stats 0.57s counted vs 0.97s real; d_semdedup 0.22s vs
         # 2.32s — the dup join was optimized away entirely).
-        # Canary-basket rows run with the parquet-source plan memo
-        # cleared (r12): the basket is the host-drift INSTRUMENT, frozen
-        # behaviorally since r1 — letting the r12 table-resolution memo
-        # speed the canaries would recalibrate canary_factor by a code
-        # change instead of host drift and skew every cross-round
-        # adjusted comparison. All non-canary rows keep the memo.
-        if name in CANARIES:
-            _tables._READ_MEMO.clear()
-        t0 = time.time()
-        df = registry[name].fn(spark, sf_dir)
-        df.write.format("noop").mode("overwrite").save()
-        return time.time() - t0
+        # Canary-basket rows bypass the DataFrame memo: the basket is
+        # the host-drift INSTRUMENT, frozen behaviorally since r1, so
+        # each of its loads pays source resolution as in r1 — letting
+        # the r12 table-resolution memo speed the canaries would
+        # recalibrate canary_factor by a code change instead of host
+        # drift and skew every cross-round adjusted comparison. All
+        # non-canary rows keep the memo.
+        with cache.bypass() if name in CANARIES else contextlib.nullcontext():
+            t0 = time.time()
+            df = registry[name].fn(spark, sf_dir)
+            df.write.format("noop").mode("overwrite").save()
+            return time.time() - t0
 
     timings: dict[str, float] = {}
     if not cold_only:

@@ -7,6 +7,8 @@ and SimHash dedup (the standard shingle→minhash→band→bucket pipeline).
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -184,9 +186,6 @@ def identity_docs(docs):
     return uniq.unionByName(deduped)
 
 
-_IDENTITY_CACHE: dict = {}
-
-
 def identity_documents(spark, sf_dir: str):
     """Session-cached identity_docs over the documents table. The split
     subtree (three pruned scans + two narrow aggregates) re-expands at
@@ -197,11 +196,13 @@ def identity_documents(spark, sf_dir: str):
     (and the same 100 TB analog: a materialized staged view next to the
     corpus) as shingle_table. Callers holding an arbitrary frame rather
     than a (spark, sf_dir) table keep calling identity_docs directly."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _IDENTITY_CACHE.get(key)
-    if df is None:
-        from streams_spark.sources.tables import load_table
+    from streams_spark.sources import cache
+    from streams_spark.sources.tables import load_table
 
-        df = identity_docs(load_table(spark, sf_dir, "documents")).cache()
-        _IDENTITY_CACHE[key] = df
-    return df
+    return cache.memo(
+        spark,
+        "identity_documents",
+        sf_dir,
+        [os.path.join(sf_dir, "documents.parquet")],
+        lambda: identity_docs(load_table(spark, sf_dir, "documents")).cache(),
+    )

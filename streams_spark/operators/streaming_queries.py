@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from streams_spark.operators import finite_or_null
 from streams_spark.registry import register
-from streams_spark.sources.feed_cache import cached_feed as _cached_feed
+from streams_spark.sources import feed_cache
 from streams_spark.sources.tables import load_table
 
 _SHUFFLE_CONF = "spark.sql.shuffle.partitions"
@@ -393,7 +393,7 @@ def st_sequence_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     # staged through the shared feed cache (built once per source
     # vintage) — a fresh mkdtemp per call would leak one parquet copy
     # of the log per invocation and re-pay the staging write every run
-    stage_dir = _cached_feed(
+    stage_dir = feed_cache.cached_feed(
         sf_dir,
         "seqstate",
         "v1|space,segment,sequence,timestamp",
@@ -1107,7 +1107,7 @@ def st_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("event_id", "ts", "user_id", "event_type", "value")
     )
     # 3 time-ranged files -> 3 micro-batches under maxFilesPerTrigger=1
-    feed_dir = _cached_feed(
+    feed_dir = feed_cache.cached_feed(
         sf_dir,
         "cdc",
         # version + projected schema in the key: a code change to either
@@ -1235,7 +1235,7 @@ def st_cms_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    feed_dir = _cached_feed(
+    feed_dir = feed_cache.cached_feed(
         sf_dir,
         "doccms",
         "id3|v2|doc_id,text",
@@ -1353,7 +1353,7 @@ def _sentinel_feed(
     micro-batch can flush all watermark-held state (see
     st_stream_outer_join for the emission-discipline rationale).
 
-    Cached via _cached_feed (deterministic in sf_dir/op/columns +
+    Cached via feed_cache.cached_feed (deterministic in sf_dir/op/columns +
     source vintage). Also pins noDataMicroBatches=true (true IS the
     Spark default; the pin only guards against a harness having turned
     it off, and it is scoped to the conf read at query start)."""
@@ -1385,7 +1385,7 @@ def _sentinel_feed(
             "overwrite"
         ).parquet(feed)
 
-    return _cached_feed(sf_dir, op, ",".join(columns), build)
+    return feed_cache.cached_feed(sf_dir, op, ",".join(columns), build)
 
 
 # ---------------------------------------------------------------------------
@@ -1618,7 +1618,7 @@ def st_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("content_md5"),
     )
     # 3 doc_id-ranged files -> 3 ordered micro-batches
-    feed = _cached_feed(
+    feed = feed_cache.cached_feed(
         sf_dir,
         "docingest",
         # v3: NULL text keys NULL (null-guarded md5), not md5('')

@@ -8,8 +8,11 @@ non-SQL-expressible ops such as hash-seeded LSH).
 
 from __future__ import annotations
 
+import json
+import re
 from collections.abc import Callable
 from dataclasses import dataclass
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -35,291 +38,42 @@ def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryF
     return deco
 
 
-# Queries listed here are registered FIRST, in this order; everything else
-# follows in module-import order. The harness samples a prefix of the
-# registry when grading, so each round this list rotates
-# not-yet-oracle-verified queries to the front and rotates families whose
-# correctness evidence is already recorded (e.g. the TPC-H suite, green in
-# round 1) toward the back. Pure ordering — every query remains registered
-# and runnable regardless of position.
-ROUND_PRIORITY = [
-    # --- round 11 window (first 50) ---
-    # head (6): the only operators in the registry with NO driver
-    # CORRECTNESS row ever (landed after the r10 window was fixed;
-    # VERDICT r10 #1). All six are gate-green at both scales and were
-    # independently oracle-verified by the r10 judge — this window adds
-    # the hard driver signal.
-    "m_h264_gop",
-    "m_h264_intra4x4",
-    "m_h264_deblock",
-    "m_h264_partitions",
-    "m_h264_slices",
-    "m_aac_census",
-    # r11 new operator (registered later this round; the `if n in
-    # REGISTRY` guard skips it until it lands): avc1/avcC-packaged
-    # H.264 decode — VERDICT r10 #2.
-    "m_h264_avc1",
-    # r11 new operator: cross-container pixel dedup over mp4v+avc1
-    # packagings — never driver-checked, so it outranks freshness
-    # rotation.
-    "m_cross_container_dedup",
-    # r11 new operator: FMO/ASO decode (slice groups, 8.2.2) —
-    # never driver-checked.
-    "m_h264_fmo",
-    # r11 new operator: multi-reference L0 P decode (2-deep sliding-
-    # window DPB, per-row ref_idx_l0 te(v)) — never driver-checked, so
-    # it outranks freshness rotation; pushes v_cluster_status past
-    # slot 50 (it keeps its r6 evidence one more round and must lead
-    # the r12 rotation with v_metadata_filter and p_ingest_guard).
-    "m_h264_multiref",
-    # then the r11 rotation target (VERDICT r10 #1 balance): the rows
-    # whose latest driver evidence is round 6 (reproduced from the
-    # CORRECTNESS_r0* union). The two never-checked inserts above push
-    # the last two of them (v_metadata_filter, p_ingest_guard) past
-    # slot 50: they keep their r6 evidence one more round — a
-    # never-checked row beats one round of staleness — and must lead
-    # the r12 rotation.
-    "q9_profit_by_nation_year",
-    "q10_returned_items",
-    "q11_important_stock",
-    "q12_late_shipments",
-    "q13_order_distribution",
-    "q14_promo_revenue",
-    "q15_top_supplier",
-    "q16_supplier_part_count",
-    "q17_small_qty_revenue",
-    "q18_large_volume_customer",
-    "q20_promotion_suppliers",
-    "q21_waiting_suppliers",
-    "q22_sales_opportunity",
-    "q_rollup_revenue",
-    "q_cube_orders",
-    "q_distinct_aggs",
-    "q_percentiles",
-    "q_unpivot",
-    "q_setops",
-    "q_scalar_functions",
-    "q_date_functions",
-    "q_pivot_linestatus",
-    "q_salted_agg",
-    "q_grouping_sets",
-    "q_array_functions",
-    "w_topk_suppliers_per_nation",
-    "w_customer_ranks",
-    "w_asof_purchase_click",
-    "w_range_join",
-    "w_range_join_bucketed",
-    "w_retention",
-    "w_hypertable_rollup",
-    "v_get_spaces",
-    "v_get_segments",
-    "v_consume_segment",
-    "v_consume_space",
-    "v_consume_interleave",
-    "v_segment_offset",
-    "v_sequence_validate",
-    "v_produce_status",
-    "v_cluster_status",
-    "v_metadata_filter",
-    "p_ingest_guard",
-    # ---- 50-query window boundary (r11) ----
-    # r11 late additions (positions 51+): landed after the 50 slots
-    # above were committed to the six never-checked rows + the
-    # r6-evidence rotation — they ride the builder's two-scale gate +
-    # judge this round and MUST front the r12 window (never-checked
-    # beats staleness).
-    "m_cross_container_dedup",
-    "m_gif_frames",           # NEW r11: animated-GIF per-frame census
-    "m_image_format_dedup",   # NEW r11: 5-container pixel dedup
-    "m_audio_container_dedup",  # NEW r11: WAV/AU/AIFF/G.711 dedup
-    "m_h264_rplm",            # NEW r11: RPLM + MMCO-1 decode
-    # --- round 10 window (history; all 50 green in CORRECTNESS_r10) ---
-    # head: the round's new operators (registered later this round; the
-    # `if n in REGISTRY` guard skips any name that doesn't land) plus
-    # rows whose code paths this round's parser hardening touched —
-    # the MP4 stsc/stts validation and MP3 ID3 handling are
-    # behavior-neutral on clean fixtures (builder's gate re-proves),
-    # but driver evidence on the two census rows is the honest check.
-    "m_h264_keyframes",  # NEW r10: Annex-B H.264 I-frame decode
-    "m_video_pixel_dedup",  # NEW r10: encoding-invariant keyframe dedup
-    "m_jpeg_arith",  # NEW r10: SOF10 QM arithmetic-coded JPEG decode
-    "m_mp4_frames",  # r9-new + r10 parser hardening
-    "m_mp3_census",  # r9-new + r10 ID3 handling change
-    # then the r10 rotation target (VERDICT r9 #3): all 40 rows whose
-    # latest driver evidence is round 5 (reproduced from the
-    # CORRECTNESS_r0* union), so after this window no oracle-paired
-    # row's evidence is older than r6.
-    "d_dup_graph_stats",
-    "d_minhash_lsh_md5",
-    "d_simhash_md5",
-    "m_audio_features_real",
-    "m_cdc_chunks",
-    "m_frames_real",
-    "m_motion_real",
-    "m_thumbnail_real",
-    "p_dsir_resample",
-    "p_e2e_pipeline",
-    "p_epoch_plan",
-    "p_pad_efficiency",
-    "p_quality_ablation",
-    "q1_pricing_summary",
-    "q2_min_cost_supplier",
-    "q3_shipping_priority",
-    "q4_order_priority",
-    "q5_local_supplier_volume",
-    "q6_forecast_revenue",
-    "q7_nation_volume",
-    "q8_market_share",
-    "q_arrow_udf",
-    "q_benford",
-    "q_grid_percentile",
-    "q_incremental_agg",
-    "q_pandas_udaf",
-    "q_python_udtf",
-    "q_table_profile",
-    "s_binary_search",
-    "s_hybrid_search",
-    "s_mrl_search",
-    "st_cdc_apply",
-    "st_cms_merge",
-    "st_flagship_stream",
-    "st_ingest_dedup",
-    "st_session_stream",
-    "t_cms_heavy",
-    "t_langid_confusion",
-    "t_source_divergence",
-    "v_flagship_consume_enrich",
-    # ---- 50-query window boundary (r10) ----
-    # --- round 9 window (history; all 50 green in CORRECTNESS_r09) ---
-    # head (5): the round's genuinely new or semantics-relevant changes.
-    # The r9 NULL-ordering pins (asc_nulls_last / NULLS LAST on every
-    # formerly-EXPOSED site, NULL_ORDER_AUDIT.md) are byte-identical on
-    # the clean grading data (builder's full 228/228 gate re-run), so
-    # they don't consume window slots; these five carry either new code
-    # paths or an oracle-semantics pin worth driver evidence.
-    "m_mp4_frames",  # NEW r9: real ISO-BMFF demux + MJPEG decode
-    "m_mp3_census",  # NEW r9: real MPEG-1 Layer III frame census
-    "d_ngram_jaccard_auto",  # NEW r9: regime-dispatched Jaccard join
-    # (m_jpeg_real/m_jpeg_progressive keep their r8 green evidence and
-    # their r9 staged-feed change is behavior-neutral plumbing covered
-    # by the builder's gate, so both yield their head slots to the two
-    # genuinely new operators rather than displacing w_* rotation rows
-    # past the boundary)
-    "q_grouped_map",  # oracle pinned NULLS LAST on percent_rank order
-    "w_sessionize",  # oracle pinned; also the round's perf-weak row
-    # then the r9 rotation target (VERDICT r8 #2): all 45 rows whose
-    # latest driver evidence is round 4, so after this window no
-    # oracle-paired row's evidence is older than r5
-    "d_transitive_containment",
-    "d_semdedup",
-    "d_pagerank",
-    "m_media_dedup",
-    "q_variant_payload",
-    "q_merge_upsert",
-    "q_skyline",
-    "s_maxsim",
-    "t_bm25",
-    "t_c4_rules",
-    "d_cluster_survivors",
-    "d_dup_clusters_star",
-    "d_sample_stratified",
-    "d_tfidf_cosine",
-    "p_curriculum",
-    "p_dataset_card",
-    "p_domain_cap",
-    "p_split_leakage",
-    "p_temperature_mix",
-    "q_bitmap_distinct",
-    "q_collated_group",
-    "q_lateral_topk",
-    "q_mode_median",
-    "q_pipe_syntax",
-    "q_semi_anti_join",
-    "q_sql_udf",
-    "q_string_agg",
-    "s_centroid_shift",
-    "s_embedding_stats",
-    "s_multiprobe_lsh",
-    "s_range_search",
-    "t_bigram_lm",
-    "t_bpe_pairs",
-    "t_ccnet_buckets",
-    "t_chunk_overlap",
-    "t_novelty",
-    "t_zipf_fit",
-    "v_segment_manifest",
-    "w_anomaly_mad",
-    "w_cusum",
-    "w_drawdown",
-    "w_ewma",
-    "w_interpolate",
-    "w_seasonality",
-    "w_wow_change",
-    # ---- 50-query window boundary ----
-    "m_jpeg_real",
-    "m_jpeg_progressive",
-    "m_thumbnail_real",
-    # round-10 head candidates: the remaining r9-pinned files' queries
-    # keep their r5-r8 green evidence (pins verified no-op by the
-    # builder's gate + FUZZ_r9_* sweeps); rotate the oldest of them
-    # here next round
-    "m_decode_real",
-    "v_space_offset",
-    "q_correlated_exists",
-    "q_full_outer",
-    "q_lateral_explode",
-    "q_outliers",
-    "q_salted_join",
-    "q_stats_functions",
-    "q_window_frames",
-    "s_ann_lsh_topk",
-    "s_centroid_search",
-    "s_kmeans_train",
-    "s_pq_search",
-    "s_pq_train",
-    "s_recall_eval",
-    "s_vector_quantize",
-    "st_stream_dedup",
-    "st_stream_enrich",
-    "st_stream_topk",
-    "t_char_entropy",
-    "t_heavy_hitters",
-    "t_length_histogram",
-    "t_pii_redact",
-    "t_repetition",
-    "t_tfidf_keywords",
-    "t_unigram_lm",
-    "t_vocab_stats",
-    "v_chunked_produce",
-    "v_latest_entity_state",
-    "v_watermark_lag",
-    "w_asof_forward",
-    "w_attribution",
-    "w_gap_fill",
-    "w_pareto_customers",
-    "w_rolling_dau",
-    "w_rolling_median",
-    "w_user_streaks",
-    "s_ivf_pq_search",
-    "s_knn_classify",
-    "s_diversity",
-    "q_snapshot_diff",
-    "q_kmv_distinct",
-    "q_kmv_setops",
-    "st_transform_with_state",
-    "q_window_navigation",
-    "p_token_budget",
-    "w_scd2_user_state",
-    "q_json_props",
-    "q19_disjunctive_revenue",
-    # later-round-window queries stay registered behind these
-    # (import order)
-]
+# Correctness runs sample a prefix of the registry, so the order puts the
+# names with the least recorded evidence first: names with no passing row
+# in any CORRECTNESS_r<N>.json ledger at the repo root lead, then the rest
+# by the round of their newest passing row, oldest first. Import order
+# breaks ties, and is the whole order when no ledger is present. Pure
+# ordering: every query stays registered and runnable.
+_LEDGER = re.compile(r"CORRECTNESS_r(\d+)\.json")
+_ROOT = Path(__file__).resolve().parent.parent
+
+
+def _passed(row: dict) -> bool:
+    """A ledger row that passed the oracle check: rows, schema and
+    value hash match the oracle, or, for a query registered without an
+    oracle, the rows-only check returned rows."""
+    if row.get("err") == "no_oracle":
+        return bool(row.get("spark_rows"))
+    return all(
+        row.get(k) is True for k in ("rows_match", "schema_match", "hash_match")
+    )
+
+
+def evidence_order(names: list[str]) -> list[str]:
+    newest: dict[str, int] = {}
+    for path in _ROOT.glob("CORRECTNESS_r*.json"):
+        m = _LEDGER.fullmatch(path.name)
+        if m is None:
+            continue
+        for name, row in json.loads(path.read_text()).items():
+            if _passed(row):
+                newest[name] = max(newest.get(name, 0), int(m.group(1)))
+    return sorted(names, key=lambda n: newest.get(n, 0))
 
 
 def load_all() -> dict[str, QuerySpec]:
     """Import every query module (side effect: fills REGISTRY), then
-    order the mapping: ROUND_PRIORITY names first, rest in import order."""
+    order the mapping by ``evidence_order``."""
     import streams_spark.operators.verbs  # noqa: F401
     import streams_spark.operators.relational  # noqa: F401
     import streams_spark.operators.tpch_extra  # noqa: F401
@@ -331,6 +85,4 @@ def load_all() -> dict[str, QuerySpec]:
     import streams_spark.operators.streaming_queries  # noqa: F401
     import streams_spark.operators.pipeline  # noqa: F401
 
-    ordered = {n: REGISTRY[n] for n in ROUND_PRIORITY if n in REGISTRY}
-    ordered.update((n, s) for n, s in REGISTRY.items() if n not in ordered)
-    return ordered
+    return {n: REGISTRY[n] for n in evidence_order(list(REGISTRY))}

@@ -13,20 +13,25 @@ from __future__ import annotations
 def cached_feed(sf_dir: str, op: str, extra_key: str, build) -> str:
     """Deterministic staged-feed cache shared by the feed-building
     streaming ops (sentinel feeds, CDC feed, ingest feed): the feed dir
-    is keyed on (sf_dir, op, extra_key, source mtime+size) under the
-    system temp dir and built once — repeated gate/bench runs reuse it,
-    and a regenerated source at the same path invalidates it. `build`
-    receives the target dir and must leave a parquet _SUCCESS marker."""
+    is keyed on (sf_dir, op, extra_key, source identity — see
+    cache.file_identity) under the system temp dir and built once —
+    repeated gate/bench runs reuse it, and a regenerated source at the
+    same path (a rewritten part file, for a directory source)
+    invalidates it. `build` receives the target dir and must leave a
+    parquet _SUCCESS marker."""
     import getpass
     import hashlib
     import os
     import tempfile
 
+    from streams_spark.sources.cache import file_identity
+
     src_name = "documents.parquet" if op.startswith("doc") else "events.parquet"
-    st = os.stat(os.path.join(sf_dir, src_name))
+    # "|".join keeps a single-file key byte-identical to the
+    # "|{mtime_ns}|{size}" form, so feeds staged before stay valid
+    ident = "|".join(map(str, file_identity(os.path.join(sf_dir, src_name))))
     key = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}|{op}|{extra_key}"
-        f"|{st.st_mtime_ns}|{st.st_size}".encode()
+        f"{os.path.abspath(sf_dir)}|{op}|{extra_key}|{ident}".encode()
     ).hexdigest()[:10]
     # per-user cache root (0700): a world-shared temp path would let
     # another uid pre-create the dir (permission failures) or serve

@@ -13,6 +13,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from streams_spark.schema import TABLE_NAMES
+from streams_spark.sources import cache
 
 
 def _normalize_event_ts(dtype):
@@ -46,35 +47,16 @@ def _normalize_event_ts(dtype):
     return F.col("ts")
 
 
-# Analyzed-plan memo for parquet sources: one driver-side schema
-# inference + source resolution per (session, path, file identity).
-# Nothing row-side is cached — the memoized DataFrame is a plain lazy
-# scan recomputed from the parquet file on every action; the memo only
-# removes the repeated DRIVER-side footer read + DataSource resolution
-# (measured ~0.11 s per spark.read.parquet call on this harness, paid
-# 6x per query per bench run before this) — the same planning-time
-# cost class as Spark's own file-listing cache (guide: repeated
-# multi-minute listings at scale). Keyed on file mtime+size so an
-# in-place testdata rewrite invalidates; cleared by bench.py's
-# _clear_session_caches alongside the other module-level memos so the
-# cold pass stays attributable.
-_READ_MEMO: dict = {}
-
-
 def read_parquet_memo(spark: SparkSession, path: str) -> DataFrame:
-    try:
-        st = os.stat(path)
-        key = (
-            spark.sparkContext.applicationId, path,
-            st.st_mtime_ns, st.st_size,
-        )
-    except OSError:
-        return spark.read.parquet(path)
-    df = _READ_MEMO.get(key)
-    if df is None:
-        df = spark.read.parquet(path)
-        _READ_MEMO[key] = df
-    return df
+    """`spark.read.parquet(path)`, resolved once per session and source
+    identity (sources/cache.py). Nothing row-side is cached: the DataFrame
+    is a lazy scan that every action re-reads; the memo removes only the
+    repeated driver-side footer read and DataSource resolution, measured
+    at ~0.11 s per `spark.read.parquet` call and paid up to 6x per query
+    without it."""
+    return cache.memo(
+        spark, "parquet", path, [path], lambda: spark.read.parquet(path)
+    )
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -31,3 +31,36 @@ def test_entry_contract(spark):
     o = mod.oracle_sql()
     assert set(o) <= set(q)
     assert len(q) >= 30
+
+
+def test_entry_order_puts_never_checked_names_first():
+    """Every registered name appears exactly once in
+    __spark_entry__.queries(), and every name with no passing row in any
+    repo-root CORRECTNESS_r<N>.json ledger precedes every name that has
+    one (correctness runs sample a prefix of this order)."""
+    import importlib
+    import json
+    import pathlib
+    import sys
+
+    root = pathlib.Path(__file__).resolve().parent.parent
+    sys.path.insert(0, str(root))
+    names = list(importlib.import_module("__spark_entry__").queries())
+    assert sorted(names) == sorted(set(names)) == sorted(REGISTRY)
+
+    checked = set()
+    for path in root.glob("CORRECTNESS_r*.json"):
+        for name, row in json.loads(path.read_text()).items():
+            if row.get("err") == "no_oracle":
+                ok = bool(row.get("spark_rows"))
+            else:
+                ok = all(
+                    row.get(k) is True
+                    for k in ("rows_match", "schema_match", "hash_match")
+                )
+            if ok:
+                checked.add(name)
+    flags = [name in checked for name in names]
+    assert flags == sorted(flags), [
+        (i, n) for i, n in enumerate(names) if n not in checked
+    ]

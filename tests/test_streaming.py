@@ -784,21 +784,25 @@ def test_compact_files_per_space_controls_file_count(spark, tmp_path):
     assert seqs == list(range(1, 6))
 
 
-def test_staged_blob_key_tracks_synthesis_module(monkeypatch):
+def test_staged_blob_key_tracks_synthesis_module(spark, sf_dir, monkeypatch):
     """The staged-blob cache key must include multimodal.py itself (the
     synthesis rules live there): editing geometry/spec formulas without
     touching the codec modules must rebuild fixtures, not serve stale
-    blobs that no longer match the oracle (ADVICE r9)."""
+    blobs that no longer match the oracle (ADVICE r9). Feed builders
+    must call feed_cache.cached_feed through the module at call time,
+    so a patch of it (the perfbench tracer's) also sees the stream
+    feeds, st_cdc_apply's among them."""
     import os
 
     import streams_spark.operators.multimodal as mm
+    import streams_spark.operators.streaming_queries as sq
     import streams_spark.sources.feed_cache as fc
     from streams_spark.functions import mp3 as mp3_mod
 
     captured = {}
 
     def fake_cached_feed(sf_dir, op, extra_key, build):
-        captured["key"] = extra_key
+        captured["op"], captured["key"] = op, extra_key
         raise OSError("capture only")
 
     monkeypatch.setattr(fc, "cached_feed", fake_cached_feed)
@@ -810,3 +814,7 @@ def test_staged_blob_key_tracks_synthesis_module(monkeypatch):
     assert out is sentinel
     st = os.stat(mm.__file__)
     assert f"{st.st_mtime_ns}:{st.st_size}" in captured["key"]
+
+    with pytest.raises(OSError, match="capture only"):
+        sq.st_cdc_apply(spark, sf_dir)
+    assert captured["op"] == "cdc"

@@ -65,6 +65,7 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from streams_spark.operators import dedup
+    from streams_spark.sources import cache
     from streams_spark.session import get_spark
 
     spark = get_spark("ppjoin-crossover")
@@ -72,8 +73,7 @@ def main() -> None:
 
     def clear() -> None:
         spark.catalog.clearCache()
-        dedup._SHINGLE_CACHE.clear()
-        dedup._EDGE_CACHE.clear()
+        cache.clear()
 
     def run(fn, d: str) -> float:
         t0 = time.time()

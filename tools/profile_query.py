@@ -14,6 +14,8 @@ compiled with their Janino time (`inspect.codegen_stats`). The cold run
 is the session's first, so it pays plan resolution, codegen and
 Python-worker start-up; the warm run shows what a re-run still pays.
 On-disk staged feeds persist across processes, so they are warm in both.
+A second line per run gives the DataFrame memo's hits and misses by kind
+(`sources.cache.stats()`), i.e. which cached sources the run reused.
 """
 
 from __future__ import annotations
@@ -36,7 +38,9 @@ def _jobs_started(spark) -> int:
 
 def profile_run(spark, fn, sf_dir: str) -> dict:
     from streams_spark.plans.inspect import codegen_stats
+    from streams_spark.sources import cache
 
+    memo0 = cache.stats()
     jobs0 = _jobs_started(spark)
     compiles0, compile_ms0 = codegen_stats(spark)
     t0 = time.perf_counter()
@@ -45,12 +49,19 @@ def profile_run(spark, fn, sf_dir: str) -> dict:
     df.write.format("noop").mode("overwrite").save()
     t2 = time.perf_counter()
     compiles1, compile_ms1 = codegen_stats(spark)
+    memo = {
+        kind: tuple(
+            n[k] - memo0.get(kind, {}).get(k, 0) for k in ("hits", "misses")
+        )
+        for kind, n in cache.stats().items()
+    }
     return {
         "build_s": t1 - t0,
         "action_s": t2 - t1,
         "jobs": _jobs_started(spark) - jobs0,
         "compiles": compiles1 - compiles0,
         "compile_ms": compile_ms1 - compile_ms0,
+        "memo": {kind: hm for kind, hm in memo.items() if any(hm)},
     }
 
 
@@ -76,6 +87,10 @@ def main(argv: list[str]) -> int:
                 f"  jobs {r['jobs']}  compiles {r['compiles']}"
                 f" ({r['compile_ms']:.0f} ms)"
             )
+            memo = ", ".join(
+                f"{kind} {h}/{m}" for kind, (h, m) in sorted(r["memo"].items())
+            )
+            print(f"  memo hits/misses: {memo or 'none'}")
     finally:
         spark.stop()
     return 0
